@@ -372,7 +372,11 @@ object PlanDump {
         ("per-micro-batch shape of online feature serving: flatMapGroupsWithState keyed on " +
           "the entity holds ONE state row per live entity (the latest version) — probes " +
           "emit on arrival in Append mode, history is never buffered, no drain needed; " +
-          "a year of traffic costs the same state as a day's."),
+          "a year of traffic costs the same state as a day's. Micro-batches are " +
+          "byte-bounded (maxBytesPerTrigger = spark.sql.files.maxPartitionBytes) runs of " +
+          "whole-week files in mtime order: the week order across batches matters, the " +
+          "batch boundary does not — the fold serves each probe from its own week's state, " +
+          "so at sf0.1 every week lands in this one batch."),
       "q_rerank" ->
         ("two-stage serving: the q_bm25 retrieval (shared code path) funnels to a " +
           "Materialized 20-row candidate set that BROADCASTS into the documents scan — " +
@@ -495,16 +499,10 @@ object PlanDump {
       finally graft.FsUtil.deleteRecursively(live)
     }
     locally {
-      import spark.implicits._
       val live = graft.streaming.Replay.pitReplayDir(spark, d)
       try section("q_stream_pit (final micro-batch)",
         graft.streaming.Replay.lastExecutionPlan(
-          graft.streaming.Replay.pitStream(
-            spark.readStream
-              .schema("kind INT, event_id LONG, user_id LONG, tsu LONG, wk LONG, value DOUBLE")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(s"$live/*.parquet")
-              .as[graft.streaming.Replay.PitRow]).toDF(),
+          graft.streaming.Replay.pitStream(graft.streaming.Replay.pitRows(spark, live)).toDF(),
           java.nio.file.Files.createTempDirectory("plandump-pit-").toString))
       finally graft.FsUtil.deleteRecursively(live)
     }

@@ -15,6 +15,12 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the status store still records every job, stage and SQL
+      // execution for the disabled UI; nothing in the engine reads it,
+      // so keep it small instead of growing with every query run
+      .config("spark.sql.ui.retainedExecutions", "10")
+      .config("spark.ui.retainedJobs", "10")
+      .config("spark.ui.retainedStages", "10")
       // events.parquet carries TIMESTAMP(NANOS); read as long + convert
       // in Tables.events (Spark has no nanos timestamp type).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

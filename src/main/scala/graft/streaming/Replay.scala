@@ -1809,9 +1809,9 @@ object Replay {
   final case class PitRow(kind: Int, event_id: Long, user_id: Long,
       tsu: Long, wk: Long, value: Double)
 
-  /** Per-entity serving state: the latest feature version seen in
-    * COMPLETED micro-batches (max by (tsu, event_id) — an associative,
-    * order-free fold) plus how many versions preceded it.
+  /** Per-entity serving state: the latest feature version folded so
+    * far (max by (tsu, event_id) — an associative, order-free fold)
+    * plus how many versions preceded it.
     */
   final case class PitState(tsu: Long, eid: Long, value: Double, n: Long)
 
@@ -1824,21 +1824,20 @@ object Replay {
     StructField("wk", LongType), StructField("value", DoubleType)))
 
   /** Stage the PIT replay dir: ONE file per epoch-week holding that
-    * week's feature versions AND probes, mtimes strictly increasing,
-    * so `maxFilesPerTrigger=1` delivers each week as one atomic
-    * micro-batch; [[pitStream]] folds a batch's versions before its
-    * probes emit, so week w's features serve week w's traffic — the
-    * feature-store publish cadence the oracle encodes as
-    * `v.wk <= p.wk`. (r11-r14 staged versions and probes as separate
-    * files; one publish per week halves the trigger count with the
-    * identical serve contract.)
+    * week's feature versions AND probes, mtimes strictly increasing
+    * with the week, so the file source delivers weeks in order and
+    * never splits one across micro-batches. Where the batches split
+    * does not matter: [[pitStream]] folds each batch week by week,
+    * versions before probes, so week w's features serve week w's
+    * traffic and no later week's — the feature-store publish cadence
+    * the oracle encodes as `v.wk <= p.wk`.
     */
   private[graft] def pitReplayDir(s: SparkSession, d: String): java.nio.file.Path =
     // the weekly layout is a pure function of events.parquet, so it
     // publishes once under the content-keyed cache and each replay
     // links it (r15 — the r14 VERDICT ruling extending the queue-shard
-    // staging idiom to this layout; the maxFilesPerTrigger=1 per-week
-    // commit ordering below is SEMANTIC and unchanged)
+    // staging idiom to this layout; the week-ascending mtime order
+    // below is SEMANTIC across micro-batches)
     linkedStagedLayout(s, "pit", Seq(s"$d/events.parquet"), "replay-pit-in-") { live =>
       import java.nio.file.{Files, StandardCopyOption}
       import java.nio.file.attribute.FileTime
@@ -1852,13 +1851,12 @@ object Replay {
           when(col("event_type") === "purchase", 0).otherwise(1).as("kind"),
           col("event_id"), col("user_id"), col("tsu"), col("wk"), col("value"))
       // ONE partitioned write stages every week as ONE slice holding
-      // BOTH kinds (r11 one-write rule; r15 halves the trigger count:
-      // the operator folds a batch's versions BEFORE its probes emit —
-      // see [[pitStream]]'s mixed-batch contract — so week w's atomic
-      // publish of features+probes in one micro-batch preserves the
-      // `v.wk <= p.wk` serve cadence exactly, and one file per week is
-      // robust to weeks missing a kind where any fixed files-per-
-      // trigger pairing would misalign). partitionBy on a COPY of the
+      // BOTH kinds (r11 one-write rule): the operator orders a batch by
+      // (week, kind) — see [[pitStream]] — so a week's features and
+      // probes in one file keep the `v.wk <= p.wk` serve cadence, and
+      // a file per week is robust to weeks missing a kind. A file is
+      // the unit the stream reader never splits across micro-batches,
+      // so whole weeks stay atomic. partitionBy on a COPY of the
       // key keeps wk in the data files (the stream reader's schema
       // needs it); repartition on the same key lands each week in ONE
       // task, so each dir holds exactly ONE file; an empty week
@@ -1891,14 +1889,18 @@ object Replay {
     }
 
   /** ONLINE POINT-IN-TIME ENRICHMENT — the serving-side state fold:
-    * per entity keep only the LATEST feature version from completed
-    * batches (O(entities) state at ANY stream length — the online
-    * twin of the batch [[graft.ops.Dedup]] q_pit_join, whose state is
-    * the full history because it answers probes at arbitrary past
-    * timestamps; the online path answers "now", so one version
-    * suffices). Versions fold before probes emit within an
-    * invocation, so a mixed batch degenerates to the same `wk ≤ wk`
-    * contract the file layout enforces.
+    * per entity keep only the LATEST feature version folded so far
+    * (O(entities) state at ANY stream length — the online twin of the
+    * batch [[graft.ops.Dedup]] q_pit_join, whose state is the full
+    * history because it answers probes at arbitrary past timestamps;
+    * the online path answers "now", so one version suffices).
+    *
+    * Batch-boundary invariant: each invocation sorts the entity's rows
+    * by (wk, kind) and folds them in that order, so every probe emits
+    * from the state as of its own week — that week's versions in,
+    * later weeks' out. A batch holding several whole weeks therefore
+    * gives exactly the `v.wk <= p.wk` answer of one batch per week;
+    * only the order of weeks ACROSS batches (file mtime) matters.
     */
   def pitStream(rows: Dataset[PitRow]): Dataset[PitOut] = {
     import rows.sparkSession.implicits._
@@ -1908,33 +1910,48 @@ object Replay {
         OutputMode.Append(),
         GroupStateTimeout.NoTimeout
       ) { (uid: Long, it: Iterator[PitRow], state: GroupState[PitState]) =>
-        val (versions, probes) = it.toSeq.partition(_.kind == 0)
+        val ordered = it.toSeq.sortBy(r => (r.wk, r.kind))
         val st0 = state.getOption.getOrElse(PitState(Long.MinValue, Long.MinValue, 0.0, 0L))
-        val st = versions.foldLeft(st0) { (acc, v) =>
-          val better = v.tsu > acc.tsu || (v.tsu == acc.tsu && v.event_id > acc.eid)
-          PitState(
-            if (better) v.tsu else acc.tsu,
-            if (better) v.event_id else acc.eid,
-            if (better) v.value else acc.value,
-            acc.n + 1)
+        var st = st0
+        val out = ordered.flatMap { r =>
+          if (r.kind == 0) {
+            val better = r.tsu > st.tsu || (r.tsu == st.tsu && r.event_id > st.eid)
+            st = if (better) PitState(r.tsu, r.event_id, r.value, st.n + 1)
+                 else st.copy(n = st.n + 1)
+            None
+          } else
+            Some(PitOut(r.event_id, uid, r.wk,
+              if (st.n > 0) Some(st.value) else None, st.n))
         }
-        if (versions.nonEmpty) state.update(st)
-        probes.iterator.map(p =>
-          PitOut(p.event_id, uid, p.wk,
-            if (st.n > 0) Some(st.value) else None, st.n))
+        if (st.n != st0.n) state.update(st)
+        out.iterator
       }
+  }
+
+  /** The staged PIT rows of [[pitReplayDir]] as a stream: files (whole
+    * weeks) in mtime order, packed into micro-batches of at most
+    * `spark.sql.files.maxPartitionBytes` — the session's existing
+    * memory bound per scan split — and never fewer than one file.
+    */
+  private[graft] def pitRows(s: SparkSession, live: java.nio.file.Path): Dataset[PitRow] = {
+    import s.implicits._
+    s.readStream.schema(pitSchema)
+      .option("maxBytesPerTrigger", org.apache.spark.network.util.JavaUtils
+        .byteStringAsBytes(s.conf.get("spark.sql.files.maxPartitionBytes")))
+      .parquet(s"$live/*.parquet")
+      .as[PitRow]
   }
 
   /** STREAMING POINT-IN-TIME ENRICHMENT (r9, E14 × E10) — feature
     * serving as an operator: probes (clicks) enriched on arrival with
     * the entity's latest feature version (purchases) published in any
-    * EARLIER-or-same-week batch. ORACLED: the staged file cadence
-    * (versions of week w before probes of week w, weeks ascending)
-    * makes the streamed answer a pure function of the data — the
-    * DuckDB asof join over `v.wk ≤ p.wk` reproduces every enriched
-    * row bit-for-bit, including feature_version (how many versions
-    * preceded the serve) and the NULL feature of a never-featured
-    * entity.
+    * EARLIER-or-same-week. ORACLED: weeks arrive in ascending order
+    * and the fold serves each probe from its own week's state, so the
+    * streamed answer is a pure function of the data wherever the
+    * byte-bounded micro-batches split — the DuckDB asof join over
+    * `v.wk ≤ p.wk` reproduces every enriched row bit-for-bit,
+    * including feature_version (how many versions preceded the serve)
+    * and the NULL feature of a never-featured entity.
     *
     * 100 TB posture: state is ONE row per live entity (the latest
     * version), emission is per-probe Append — the stream never holds
@@ -1944,22 +1961,22 @@ object Replay {
   val qStreamPit: graft.ops.Q = graft.ops.Q(
     "q_stream_pit",
     (s, d) => {
-      import s.implicits._
       val live = pitReplayDir(s, d)
       try {
-        // ORDERING DEPENDENCY (the docSentinelDir discipline): with
-        // maxFilesPerTrigger=1, FileStreamSource delivers files
-        // OLDEST-MTIME-FIRST — pitReplayDir stamps mtimes 60 s apart in
-        // (week asc, versions-before-probes) order, and that mtime
-        // contract is what makes the replay equal the `v.wk <= p.wk`
-        // asof-join oracle. Renaming/touching the staged files breaks it.
-        val rows = s.readStream.schema(pitSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$live/*.parquet")
-          .as[PitRow]
+        // ORDERING DEPENDENCY (the docSentinelDir discipline):
+        // FileStreamSource delivers files OLDEST-MTIME-FIRST and
+        // pitReplayDir stamps one file per week with ascending mtimes,
+        // so a micro-batch holds whole weeks and every earlier week was
+        // folded by an earlier batch or earlier in this one. That
+        // cross-batch order is what makes the replay equal the
+        // `v.wk <= p.wk` asof-join oracle; touching the staged files
+        // breaks it. Where the batches split does not (see pitStream).
         replayToParquet(
-          pitStream(rows).toDF(),
-          java.nio.file.Files.createTempDirectory("replay-pit-out-").toString)
+          pitStream(pitRows(s, live)).toDF(),
+          // the returned frame lazily reads this sink, so it is
+          // registered for JVM-exit cleanup rather than deleted here
+          graft.FsUtil.deleteOnExit(
+            java.nio.file.Files.createTempDirectory("replay-pit-out-")).toString)
           .orderBy("event_id")
           .select("event_id", "user_id", "probe_wk", "feature_value", "feature_version")
       } finally graft.FsUtil.deleteRecursively(live)

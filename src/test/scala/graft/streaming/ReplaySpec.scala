@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -634,6 +634,117 @@ class ReplaySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getDouble(3), r.getLong(4))).sortBy(_._1).toSeq
     assert(got == Seq((101L, 10.0, 1L), (103L, 99.0, 2L)),
       s"expected week-1 probe pinned at 10@v1 and week-2 probe at 99@v2, got $got")
+  }
+
+  /** Stage one parquet FILE per entry of `files`, mtimes ascending —
+    * the [[Replay.pitReplayDir]] layout (one file per week).
+    */
+  private def stagePit(files: Seq[Seq[Replay.PitRow]]): Path = {
+    import spark.implicits._
+    val live = Files.createTempDirectory("pit-live-")
+    files.zipWithIndex.foreach { case (rows, i) =>
+      val tmp = Files.createTempDirectory("pit-file-")
+      rows.toDF().coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val listing = Files.list(tmp)
+      val part =
+        try listing.filter(_.toString.endsWith(".parquet")).findFirst.get
+        finally listing.close()
+      val dest = live.resolve(f"$i%02d.parquet")
+      Files.move(part, dest)
+      Files.setLastModifiedTime(dest, FileTime.fromMillis(1000000000000L + i * 60000L))
+      graft.FsUtil.deleteRecursively(tmp)
+    }
+    live
+  }
+
+  private type PitServe = (Long, Long, Long, Option[Double], Long)
+
+  /** Replay `rows` through [[Replay.pitStream]]; the enriched rows by
+    * event_id, and how many micro-batches the checkpoint committed.
+    */
+  private def replayPit(rows: Dataset[Replay.PitRow]): (Seq[PitServe], Int) = {
+    val ckpt = Files.createTempDirectory("pit-ckpt-")
+    val out = Files.createTempDirectory("pit-out-")
+    try {
+      val got = Replay.replayToParquet(Replay.pitStream(rows).toDF(), s"$out/rows", ckpt.toString)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          if (r.isNullAt(3)) None else Some(r.getDouble(3)), r.getLong(4)))
+        .sortBy(_._1).toSeq
+      (got, ckpt.resolve("commits").toFile.list().count(_.forall(_.isDigit)))
+    } finally {
+      graft.FsUtil.deleteRecursively(ckpt)
+      graft.FsUtil.deleteRecursively(out)
+    }
+  }
+
+  private def pitReader(live: Path, option: String, value: Long) = {
+    import spark.implicits._
+    spark.readStream
+      .schema("kind INT, event_id LONG, user_id LONG, tsu LONG, wk LONG, value DOUBLE")
+      .option(option, value)
+      .parquet(s"$live/*.parquet")
+      .as[Replay.PitRow]
+  }
+
+  test("streaming PIT: trigger invariance — one week per batch, all weeks in one, byte-split batches agree") {
+    import Replay.PitRow
+    // a crafted five-week cadence over three entities, one file per
+    // week: a never-featured-until-week-3 entity (9), a tsu tie broken
+    // by event_id (8, week 1), weeks without versions or without
+    // probes, and a week-3 probe written BEFORE that week's version
+    val weeks = Seq(
+      Seq(PitRow(0, 100, 7, 1000L, 1, 10.0), PitRow(1, 101, 7, 1010L, 1, 0.0),
+        PitRow(1, 110, 9, 1020L, 1, 0.0), PitRow(0, 120, 8, 1100L, 1, 5.0),
+        PitRow(0, 121, 8, 1100L, 1, 6.0), PitRow(1, 122, 8, 1200L, 1, 0.0)),
+      Seq(PitRow(1, 103, 7, 2000L, 2, 0.0), PitRow(1, 123, 8, 2100L, 2, 0.0)),
+      Seq(PitRow(1, 105, 7, 3010L, 3, 0.0), PitRow(0, 104, 7, 3000L, 3, 99.0),
+        PitRow(0, 111, 9, 3100L, 3, 1.5)),
+      Seq(PitRow(0, 125, 8, 4000L, 4, 7.0)),
+      Seq(PitRow(1, 106, 7, 5000L, 5, 0.0), PitRow(1, 126, 8, 5010L, 5, 0.0),
+        PitRow(1, 112, 9, 5020L, 5, 0.0)))
+    // plain-Scala `v.wk <= p.wk` serve: latest by (tsu, event_id), count
+    val all = weeks.flatten
+    val expected = all.filter(_.kind == 1).map { p =>
+      val served = all.filter(v => v.kind == 0 && v.user_id == p.user_id && v.wk <= p.wk)
+      (p.event_id, p.user_id, p.wk,
+        served.maxByOption(v => (v.tsu, v.event_id)).map(_.value), served.size.toLong)
+    }.sortBy(_._1)
+    assert(expected.find(_._1 == 122L).get._4 == Some(6.0), "tsu tie resolves to the higher event_id")
+    assert(expected.find(_._1 == 110L).get._4.isEmpty, "entity 9 is unfeatured in week 1")
+
+    val live = stagePit(weeks)
+    try {
+      val sizes = (0 until weeks.size).map(i => Files.size(live.resolve(f"$i%02d.parquet")))
+      val (perWeek, nPerWeek) = replayPit(pitReader(live, "maxFilesPerTrigger", 1))
+      val (oneBatch, nOneBatch) = replayPit(Replay.pitRows(spark, live))
+      // a byte limit that admits exactly the first two files
+      val (split, nSplit) = replayPit(pitReader(live, "maxBytesPerTrigger", sizes(0) + sizes(1)))
+      assert(nPerWeek == weeks.size, s"one file per batch: $nPerWeek batches")
+      assert(nOneBatch == 1, s"the declared reader must take every week at once: $nOneBatch batches")
+      assert(nSplit >= 2 && nSplit < weeks.size, s"byte limit must split into multi-file batches: $nSplit")
+      assert(perWeek == expected, s"one week per batch diverged from the oracle: $perWeek")
+      assert(oneBatch == expected, s"all weeks in one batch diverged: $oneBatch")
+      assert(split == expected, s"byte-split batches diverged: $split")
+    } finally graft.FsUtil.deleteRecursively(live)
+  }
+
+  test("streaming PIT: in a mixed two-week batch a week-2 version never serves a week-1 probe") {
+    import Replay.PitRow
+    // ONE file, so ONE micro-batch, holding two weeks; the week-2
+    // version is written first. Entity 8 has only a week-2 version.
+    val live = stagePit(Seq(Seq(
+      PitRow(0, 202, 7, 2000L, 2, 99.0), PitRow(1, 201, 7, 1500L, 1, 0.0),
+      PitRow(0, 200, 7, 1000L, 1, 10.0), PitRow(1, 203, 7, 2500L, 2, 0.0),
+      PitRow(1, 211, 8, 1600L, 1, 0.0), PitRow(0, 212, 8, 2200L, 2, 3.0))))
+    try {
+      val (got, batches) = replayPit(Replay.pitRows(spark, live))
+      assert(batches == 1)
+      assert(got == Seq[PitServe](
+        (201L, 7L, 1L, Some(10.0), 1L), (203L, 7L, 2L, Some(99.0), 2L),
+        (211L, 8L, 1L, None, 0L)),
+        s"week-1 probes must see week-1 state only, got $got")
+    } finally graft.FsUtil.deleteRecursively(live)
   }
 
   test("streaming PIT on live data: every enriched row re-derived from raw events in plain Scala") {
