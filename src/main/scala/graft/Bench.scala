@@ -73,7 +73,13 @@ object Bench {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      catch {
+        case t: Throwable =>
+          // why it failed goes to stderr: the stdout lines stay byte-stable
+          System.err.println(
+            s"FAIL $name: ${t.getClass.getName}: ${String.valueOf(t.getMessage).replace('\n', ' ')}")
+          return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
 

@@ -680,46 +680,22 @@ object Replay {
       .drop("rr", "skey")
   }
 
-  /** CONTENT-KEYED staged-shard cache (r13 VERDICT): the ts-round-robin
-    * staging re-sorted and re-wrote the corpus on EVERY replay (3 bench
-    * passes × each queue query × scales). The shard logs are a pure
-    * function of (source file, query feed: column set + sentinel shape
-    * + shard count), so they publish ONCE under the content-keyed
-    * layout idiom ([[graft.ops.Partitioned.sourceKey]] +
-    * `buildAtomically`) and every replay HARD-LINKS them into its
-    * private live dir — the broker's ack = physical drop deletes the
-    * LINKS, never the cached inodes, so the live queue keeps its
-    * cannot-relist-history contract while warm replays skip the
-    * staging job entirely (`df` is by-name: on a warm hit no Spark job
-    * runs at all, not even the sharding plan's offset collect). Falls
-    * back to a per-file copy where the tmp filesystem refuses links.
-    */
-  /** CONTENT-KEYED staged-LAYOUT cache (r15 — the r14 queue-shard idiom
-    * generalized to file-source replay dirs, per the r14 VERDICT ruling
-    * that staging is input plumbing, not the measured operator): a
-    * replay input layout that is a PURE FUNCTION of its source file
-    * (`build` must be deterministic, including mtime stamps) publishes
-    * ONCE under [[graft.ops.Partitioned.sourceKey]] + `buildAtomically`,
-    * and every replay HARD-LINKS the files into its own private live
-    * dir — the first run still pays the build, a data change changes
-    * the key, and deleting the live dir after the replay only drops
-    * links. Mtimes ride the shared inode (the FileStreamSource ordering
-    * contract is stamped at build time); the copy fallback re-stamps
-    * from the cached file.
+  /** A replay input layout staged by [[graft.ops.Staged]] (`build` must
+    * be deterministic, including mtime stamps — the FileStreamSource
+    * ordering contract is stamped at build time), HARD-LINKED file by
+    * file into a private live dir per replay: deleting the live dir
+    * after the replay only drops links, never the staged inodes, and
+    * mtimes ride the shared inode. The copy fallback, where the tmp
+    * filesystem refuses links, re-stamps from the staged file.
     */
   private def linkedStagedLayout(s: SparkSession, tag: String, srcPaths: Seq[String],
       livePrefix: String)(build: java.nio.file.Path => Unit): java.nio.file.Path = {
     import java.nio.file.{Files, Paths}
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_stage_" +
-      graft.ops.Partitioned.sourceKey(srcPaths)
-    def complete() = graft.ops.Partitioned.successExists(s, root)
-    if (!complete()) {
-      graft.ops.Partitioned.buildAtomically(s, root, () => complete()) { tmp =>
-        val p = Paths.get(tmp)
-        Files.createDirectories(p)
-        build(p)
-        Files.write(p.resolve("_SUCCESS"), Array.emptyByteArray)
-      }
+    val root = graft.ops.Staged(s, s"${tag}_stage", 1, srcPaths) { tmp =>
+      val p = Paths.get(tmp)
+      Files.createDirectories(p)
+      build(p)
+      Files.write(p.resolve("_SUCCESS"), Array.emptyByteArray)
     }
     val live = Files.createTempDirectory(livePrefix)
     val rootP = Paths.get(root)
@@ -743,21 +719,26 @@ object Replay {
     live
   }
 
+  /** Queue shard logs staged by [[graft.ops.Staged]] — a pure function
+    * of (source file, column set, shard count) — HARD-LINKED into the
+    * replay's private live dir: the broker's ack = physical drop
+    * deletes the LINKS, never the staged inodes, so the live queue
+    * keeps its cannot-relist-history contract while warm replays skip
+    * the staging job entirely (`df` is by-name: on a warm hit no Spark
+    * job runs at all, not even the sharding plan's offset collect).
+    * Falls back to a per-file copy where the tmp filesystem refuses
+    * links.
+    */
   private def stageShardsCached(s: SparkSession, name: String, df: => DataFrame,
       schema: StructType, srcPath: String, tag: String, nShards: Int,
       liveDir: java.nio.file.Path, rowsPerBatch: Int, hold: Boolean,
       sentinel: Option[org.apache.spark.sql.Row] = None): Unit = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_queue_stage_" +
-      graft.ops.Partitioned.sourceKey(Seq(srcPath)) + s"_${tag}_n$nShards"
-    def complete() = graft.ops.Partitioned.successExists(s, root)
-    if (!complete()) {
-      graft.ops.Partitioned.buildAtomically(s, root, () => complete()) { tmp =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
-        val n = graft.sources.QueueBroker.writeShardLogs(df, tmp)
-        require(n == nShards, s"staged $n shards, expected $nShards")
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(tmp, "_SUCCESS"), Array.emptyByteArray)
-      }
+    val root = graft.ops.Staged(s, s"queue_stage_${tag}_n$nShards", 1, Seq(srcPath)) { tmp =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+      val n = graft.sources.QueueBroker.writeShardLogs(df, tmp)
+      require(n == nShards, s"staged $n shards, expected $nShards")
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(tmp, "_SUCCESS"), Array.emptyByteArray)
     }
     val rootP = java.nio.file.Paths.get(root)
     (0 until nShards).foreach { i =>
